@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..session import shuffle_width
 from .dedup import _shingle_sets
 
 # Multiplicative-hash constants for stratified_sample. The id is
@@ -208,7 +209,7 @@ def bpe_train_merges(
     envelope. The sequence column is localCheckpoint'd once so later
     rounds re-read materialized rows, not a growing replace() tower."""
     spark = df.sparkSession
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    cap = shuffle_width(spark)
     if n_partitions is None:
         # one metadata-cheap count sizes the rounds to the corpus
         # (BPE_TARGET_DOCS_PER_TASK), capped at the shuffle config
@@ -1633,11 +1634,7 @@ def cdc_chunks(
     key a storage layer dedups on."""
     from pyspark.sql import Window as _Win
 
-    sess = df.sparkSession
-    try:
-        n_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_part = 32
+    n_part = shuffle_width(df.sparkSession)
     norm = T.normalize(text_col)
     # repartition by doc BEFORE the gram explosion (the winnowing
     # lesson): a compact input runs the explode+hash on one task

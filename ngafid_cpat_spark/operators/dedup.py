@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..session import shuffle_width
 from .skew import pinned_checkpoint
 
 
@@ -163,16 +164,6 @@ def jaccard_pairs(
         .select("id1", "id2", "jaccard")
     )
     return out
-
-
-def minhash_signature(text_col, k: int = 3, num_hashes: int = 32) -> Column:
-    """MinHash signature as array<long>: for hash function i, the min
-    over shingles of xxhash64(shingle, seed=i). Pure expressions."""
-    sh = T.shingles(text_col, k)
-    return F.array(*[
-        F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i))))
-        for i in range(num_hashes)
-    ])
 
 
 def minhash_sig_table(
@@ -844,12 +835,7 @@ def edit1_pairs(
         # defaultParallelism happens to match on local[N] but diverges
         # on a real cluster, and a mismatched pin would force the
         # self-join to re-exchange at session width anyway
-        .repartition(
-            int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            ),
-            "var",
-        )
+        .repartition(shuffle_width(df.sparkSession), "var")
     )
     if max_variant_freq is not None:
         hot = (
@@ -1006,9 +992,7 @@ def embedding_incremental_neardup(
     )
     # single-partition trap (one-file parquet => one task): the
     # corpus-side per-row quantize/bucket expressions must run wide
-    n_part = int(
-        history_emb.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_part = shuffle_width(history_emb.sparkSession)
     hb = (
         lsh_bucket_assignments(
             _live(history_emb).repartition(n_part),
@@ -1508,11 +1492,7 @@ def winnow_fingerprints(
     # codegen re-evaluate the regexp per array element (~n_grams x
     # per doc) — measured 22 s -> ~4 s at sf0.1 for this stage when
     # the column is materialized first (the cdc_chunks shape)
-    sess = df.sparkSession
-    try:
-        n_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_part = 32
+    n_part = shuffle_width(df.sparkSession)
     # repartition by doc BEFORE the gram explosion: a compact input
     # (one parquet file at small sf) would otherwise run the whole
     # explode+hash stage on one task, and the selection window needs

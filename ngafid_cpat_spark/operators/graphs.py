@@ -21,9 +21,12 @@ shuffle joins on node keys, one explode+count.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import shuffle_width
 from .skew import pinned_checkpoint
 
 # Static edge tables that feed EVERY round of an iterative loop are
@@ -44,8 +47,8 @@ def _pinned_edge_table(
 ) -> DataFrame:
     """Materialize a loop's STATIC table once, hash-placed and sorted
     on ``key`` behind a pinned checkpoint, at a width sized to the
-    TABLE (~1M rows per partition, min 1, cap 2048 — the
-    connected_components policy), not the session shuffle width.
+    TABLE (~250k rows per partition, min 2, cap 2048), not the
+    session shuffle width.
 
     Both halves matter and were measured separately (r15 A/B):
       * the PIN keeps partitioning/ordering visible, so per-round
@@ -237,7 +240,7 @@ def pagerank_micro(
     # every iteration re-exchanged AND re-sorted the edge table; see
     # the module note) — so the 2m-row edge table is shuffled and
     # sorted ONCE (the GraphX edge-partitioning pattern; the
-    # round-robin _parallel_checkpoint variant re-sorted per
+    # round-robin widen-then-checkpoint variant re-sorted per
     # iteration and went superlinear at 10x in tools/scale_smoke —
     # 165 s -> 105 s at 60M directed edges x 3 iterations)
     # do NOT _pinned_edge_table here (measured r15, both scales):
@@ -249,14 +252,9 @@ def pagerank_micro(
     # The pin pays off only where per-round eager cuts block AQE's
     # cross-round view (bfs/sssp/harmonic) or the loop state is
     # edge-sized (salsa); see those operators.
-    sess = edges.sparkSession
-    try:
-        n_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_part = 32
     dd = (
         de.join(deg, "s")
-        .repartition(n_part, "s")
+        .repartition(shuffle_width(edges.sparkSession), "s")
         .sortWithinPartitions("s")
         .localCheckpoint(eager=False)
     )
@@ -333,6 +331,75 @@ def pagerank_micro(
     return ranks.select("node", F.col("r").alias("rank_micro"))
 
 
+def _peel_rounds(
+    d: DataFrame,
+    peel: Callable[[DataFrame], DataFrame],
+    n_rounds: int | None,
+    max_rounds: int,
+    name: str,
+) -> DataFrame:
+    """The kcore/ktruss peel loop: exactly ``n_rounds`` peels, or (with
+    ``n_rounds=None``) peel until the surviving row count stops
+    changing, raising after ``max_rounds``. Every round's result is
+    EAGERLY checkpointed (see kcore for why)."""
+    from pyspark import StorageLevel
+
+    def _ckpt(x: DataFrame) -> DataFrame:
+        # SERIALIZED memory+disk storage: the default deserialized
+        # level holds each round's surviving-edge table as JVM row
+        # objects — ~100 B/row of header overhead, measured heap OOM
+        # at 60M directed edges x 4 rounds on a 16 GiB local JVM;
+        # serialized UnsafeRow pages are ~16 B/row and spill cleanly
+        return x.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+
+    # Free each round's persistent RDDs once the NEXT round's eager
+    # checkpoint holds the data: a round caches one edge-sized frame
+    # (two in ktruss — the lazy oriented-edge checkpoint inside
+    # _triangle_rows plus the round's _ckpt), and although surviving-
+    # edge tables shrink monotonically, up to max_rounds=64 dead
+    # frames would still cost rounds x first-round size of executor
+    # storage at scale. Round N's new RDDs are diffed against a
+    # snapshot via getPersistentRDDs and freed after round N+1
+    # materializes; frames cached BEFORE the loop (callers' lazy
+    # checkpoints) are in the snapshot and never touched.
+    jsc = d.sparkSession.sparkContext._jsc
+
+    def _persistent_ids() -> set:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    def _unpersist(ids: set) -> None:
+        m = jsc.getPersistentRDDs()
+        for jk in m.keySet().toArray():
+            if int(jk) in ids:
+                m.get(jk).unpersist(False)
+
+    prev_round_ids: set = set()
+
+    def _round(x: DataFrame) -> DataFrame:
+        nonlocal prev_round_ids
+        before = _persistent_ids()
+        out = _ckpt(peel(x))
+        _unpersist(prev_round_ids)
+        prev_round_ids = _persistent_ids() - before
+        return out
+
+    if n_rounds is not None:
+        for _ in range(n_rounds):
+            d = _round(d)
+        return d
+    d = _ckpt(d)
+    prev = d.count()
+    for _ in range(max_rounds):
+        d = _round(d)
+        n = d.count()
+        if n == prev:
+            return d
+        prev = n
+    raise RuntimeError(f"{name}: no fixpoint within max_rounds={max_rounds}")
+
+
 def kcore(
     edges: DataFrame,
     k: int = 2,
@@ -407,61 +474,7 @@ def kcore(
             "left_semi",
         )
 
-    from pyspark import StorageLevel
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        # SERIALIZED memory+disk storage: the default deserialized
-        # level holds each round's surviving-edge table as JVM row
-        # objects — ~100 B/row of header overhead, measured heap OOM
-        # at 60M directed edges x 4 rounds on a 16 GiB local JVM;
-        # serialized UnsafeRow pages are ~16 B/row and spill cleanly
-        return d.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-
-    # free each round's checkpointed frame once the NEXT round's
-    # eager checkpoint holds the data (the ktruss cleanup): surviving-
-    # edge tables shrink monotonically but max_rounds=64 dead frames
-    # still cost rounds x first-round size of executor storage at
-    # scale. Baseline snapshot protects callers' caches.
-    spark = edges.sparkSession
-
-    def _persistent_ids() -> set:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
-    def _unpersist(ids: set) -> None:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for jk in m.keySet().toArray():
-            if int(jk) in ids:
-                m.get(jk).unpersist(False)
-
-    prev_round_ids: set = set()
-
-    def _round(d: DataFrame) -> DataFrame:
-        nonlocal prev_round_ids
-        before = _persistent_ids()
-        out = _ckpt(peel(d))
-        _unpersist(prev_round_ids)
-        prev_round_ids = _persistent_ids() - before
-        return out
-
-    if n_rounds is not None:
-        for _ in range(n_rounds):
-            de = _round(de)
-    else:
-        de = _ckpt(de)
-        prev = de.count()
-        for _ in range(max_rounds):
-            de = _round(de)
-            n = de.count()
-            if n == prev:
-                break
-            prev = n
-        else:
-            raise RuntimeError(
-                f"kcore: no fixpoint within max_rounds={max_rounds}"
-            )
+    de = _peel_rounds(de, peel, n_rounds, max_rounds, "kcore")
     return de.groupBy("s").agg(F.count(F.lit(1)).alias("core_deg")).select(
         F.col("s").alias("node"), "core_deg"
     )
@@ -505,13 +518,6 @@ def ktruss(
     if n_rounds is not None and n_rounds < 1:
         raise ValueError("n_rounds must be >= 1 (the support column "
                          "only exists after a peel)")
-    from pyspark import StorageLevel
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        return d.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-
     e = edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
 
     def peel(d: DataFrame) -> DataFrame:
@@ -535,52 +541,7 @@ def ktruss(
             F.col("support") >= k - 2
         )
 
-    # Each peel round caches TWO edge-sized frames (the lazy oriented-
-    # edge checkpoint inside _triangle_rows + the round's eager _ckpt)
-    # and neither is referenced once the NEXT round's eager checkpoint
-    # holds the data — without cleanup up to max_rounds=64 dead frames
-    # accumulate in executor storage at scale. Round N's new
-    # persistent RDDs are diffed via getPersistentRDDs and freed after
-    # round N+1 materializes. Frames cached BEFORE the loop (callers'
-    # lazy checkpoints) are in the baseline snapshot and never touched.
-    spark = edges.sparkSession
-
-    def _persistent_ids() -> set:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
-    def _unpersist(ids: set) -> None:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for jk in m.keySet().toArray():
-            if int(jk) in ids:
-                m.get(jk).unpersist(False)
-
-    prev_round_ids: set = set()
-
-    def _round(d: DataFrame) -> DataFrame:
-        nonlocal prev_round_ids
-        before = _persistent_ids()
-        out = _ckpt(peel(d))
-        _unpersist(prev_round_ids)
-        prev_round_ids = _persistent_ids() - before
-        return out
-
-    if n_rounds is not None:
-        for _ in range(n_rounds):
-            e = _round(e)
-    else:
-        e = _ckpt(e)
-        prev = e.count()
-        for _ in range(max_rounds):
-            e = _round(e)
-            n = e.count()
-            if n == prev:
-                break
-            prev = n
-        else:
-            raise RuntimeError(
-                f"ktruss: no fixpoint within max_rounds={max_rounds}"
-            )
+    e = _peel_rounds(e, peel, n_rounds, max_rounds, "ktruss")
     return e.select("u", "v", "support")
 
 
@@ -828,13 +789,8 @@ def label_propagation(
     # static pin — wash at sf0.1, -39% vs pinned at 6M synthetic
     # edges (17.9 s unpinned vs 24.9 s pinned@250k-rows/partition,
     # 49 s pinned@1M).
-    sess = edges.sparkSession
-    try:
-        n_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n_part = 32
     dd = (
-        de.repartition(n_part, "t")
+        de.repartition(shuffle_width(edges.sparkSession), "t")
         .sortWithinPartitions("t")
         .localCheckpoint(eager=False)
     )

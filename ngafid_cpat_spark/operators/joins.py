@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geo
 from ..functions.timeutil import epoch_seconds
+from ..session import shuffle_width
 from .skew import pinned_checkpoint
 
 # Hard ceiling on rows broadcast as an argmin build side. Spark's own
@@ -155,9 +156,7 @@ def nearest(
       * an int: explicit width, when the fact count is known."""
     # explicit partition count: AQE would coalesce the (small) pre-join
     # shuffle to one partition, blind to the |dims|x fan-out behind it
-    n_part = int(
-        facts.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_part = shuffle_width(facts.sparkSession)
     if fan_partitions == "auto":
         n_facts = facts.count()
         fan_partitions = max(

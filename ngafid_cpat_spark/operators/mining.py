@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import shuffle_width
+
 
 def frequent_pairs(
     df: DataFrame,
@@ -50,11 +52,7 @@ def frequent_pairs(
     # (the edit1_pairs shape, operators/skew.pinned_checkpoint).
     from .skew import pinned_checkpoint
 
-    sess = df.sparkSession
-    try:
-        width = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        width = 32
+    width = shuffle_width(df.sparkSession)
     pruned = pinned_checkpoint(
         baskets.join(l1, "i", "left_semi").repartition(width, F.col("b"))
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from .skew import widen_narrow_source
 
 
 def cosine_topk(
@@ -146,35 +147,13 @@ def _dim_of(df: DataFrame, vec_col: str) -> int:
     return int(row["d"]) if row and row["d"] is not None else 0
 
 
-def _parallel_checkpoint(
-    df: DataFrame, eager: bool = False, assume_parallel: bool = False
-) -> DataFrame:
-    """localCheckpoint with single-partition-trap insurance: a
-    one-file parquet table scans as ONE partition, and a checkpoint
-    PRESERVES that partitioning — every downstream training
-    iteration (Lloyd assignment+aggregate passes) then runs as a
-    single task on a 32-thread executor (the r07 BPE/profiler catch;
-    measured 10.8 s -> ~6 s on ann_ivfpq_topk at sf0.1). Widen to
-    the session shuffle width before materializing; skip the extra
-    exchange when the input is already parallel. Row placement does
-    not affect results anywhere this is used: seeds select by id,
-    aggregates sum integers (order-independent), assignments are
-    per-row."""
-    try:
-        target = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        target = 32
-    # ``assume_parallel``: the caller guarantees the frame derives
-    # from an already-widened source by narrow ops only (partition
-    # count preserved), so skip the ``.rdd`` width probe — the probe
-    # is a FULL physical planning of the frame (measured 0.4-0.9 s
-    # on the IVFADC residual plan), pure waste when the answer is
-    # known by construction.
-    if not assume_parallel and df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    return df.localCheckpoint(eager=eager)
+# Training frames are widened (skew.widen_narrow_source) before their
+# lazy localCheckpoint: a one-file parquet table scans as ONE
+# partition and a checkpoint preserves that, so every Lloyd pass
+# would run as a single task (the r07 catch; ann_ivfpq_topk 10.8 s
+# -> ~6 s at sf0.1). Row placement does not affect results anywhere
+# this is done: seeds select by id, aggregates sum integers, and
+# assignments are per-row.
 
 
 def cosine_literal_q(vec_col: str, query: list[float]) -> "F.Column":
@@ -697,7 +676,7 @@ def kmeans_fit(
     # applied at the operator level (pass checkpoint_input=False when
     # the caller already checkpointed, e.g. kmeans_cluster_profile)
     if checkpoint_input:
-        emb = _parallel_checkpoint(emb)
+        emb = widen_narrow_source(emb).localCheckpoint(eager=False)
     seed_rows = (
         emb.select(id_col, vec_col)
         .orderBy(F.col(id_col).asc())
@@ -789,7 +768,8 @@ def kmeans_cluster_profile(
     with member count and the integer-micro mean of the quantized
     member-to-centroid cosines (deterministic; empty clusters are
     absent). Columns: centroid_id, n_vecs, avg_sim."""
-    emb = _parallel_checkpoint(emb)  # fit passes + final assign
+    # fit passes + final assign share one materialization
+    emb = widen_narrow_source(emb).localCheckpoint(eager=False)
     centroids = kmeans_fit(
         emb, k, n_iter, id_col, vec_col, quant, checkpoint_input=False
     )
@@ -880,7 +860,8 @@ def centroid_classify(
     narrow posexplode aggregate + one broadcast-codebook map-side
     assignment + one two-key groupBy; driver state is the
     n_labels x dim prototype table."""
-    emb = _parallel_checkpoint(emb)  # prototype pass + assign pass
+    # prototype pass + assign pass share one materialization
+    emb = widen_narrow_source(emb).localCheckpoint(eager=False)
     cents = label_centroids(emb, label_col, vec_col)
     assigned = _assign_quantized(emb, cents, vec_col, quant)
     return assigned.groupBy(
@@ -1027,7 +1008,7 @@ def pq_codebooks_trained(
     encodes -> searches and asserts recall vs cosine_topk) and
     oracle-floored (pq_topk_trained_embeddings' recall oracle)."""
     if checkpoint_input:
-        emb = _parallel_checkpoint(emb)
+        emb = widen_narrow_source(emb).localCheckpoint(eager=False)
     seed_rows = (
         emb.select(id_col, vec_col)
         .orderBy(F.col(id_col).asc())
@@ -1344,15 +1325,15 @@ def ivfpq_topk(
     # ONE materialization of the residual frame, shared by the PQ
     # training passes AND the ADC scoring scan below — assign+resid
     # were previously recomputed per consumer (and, off a one-file
-    # parquet scan, single-task; _parallel_checkpoint widens it).
+    # parquet scan, single-task; widen_narrow_source widens it).
     # ``input_parallel``: the caller already widened+checkpointed
     # ``emb`` (the shared-training-frame pattern), so the residual
     # frame inherits its width through narrow ops and the expensive
     # ``.rdd`` width probe is skipped.
-    r_df = _parallel_checkpoint(
-        _coarse_residuals(assigned, coarse, vec_col),
-        assume_parallel=input_parallel,
-    )
+    r_df = _coarse_residuals(assigned, coarse, vec_col)
+    if not input_parallel:
+        r_df = widen_narrow_source(r_df)
+    r_df = r_df.localCheckpoint(eager=False)
     # ONE product quantizer over the pooled residuals (not per-cell
     # books): the residual distribution is what's left after the
     # coarse quantizer, shared across cells — the paper's design, and
@@ -1520,16 +1501,6 @@ def _fs_read_text(path_str: str, spark=None) -> str:
     # copyBytes closes both streams (close=True)
     jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, True)
     return baos.toString("UTF-8")
-
-
-def _fs_exists(path_str: str, spark=None) -> bool:
-    spark = spark or _active_spark()
-    if spark is None:
-        import os
-
-        return os.path.exists(path_str)
-    fs, hpath = _hadoop_fs(spark, path_str)
-    return bool(fs.exists(hpath))
 
 
 def _fs_glob(dir_str: str, pattern: str, spark=None) -> list[str]:
@@ -2265,7 +2236,7 @@ def power_iteration_milli(
     if dim == 0:
         return []
     if checkpoint_input:
-        emb = _parallel_checkpoint(emb)
+        emb = widen_narrow_source(emb).localCheckpoint(eager=False)
     xm = F.transform(
         F.col(vec_col),
         lambda x: F.round(x.cast("double") * 1000.0, 0).cast("long"),
@@ -2357,7 +2328,7 @@ def semantic_dedup(
     # kmeans_fit checkpointed privately and the assignment re-derived
     # the caller's scan+cast from scratch (plus paid a second
     # planning-probe checkpoint for the pair/anti-join consumers)
-    emb = _parallel_checkpoint(emb)
+    emb = widen_narrow_source(emb).localCheckpoint(eager=False)
     if k == "auto":
         n_live = emb.filter(self_dot > 0).count()
         k = max(2, min(int(round(n_live / target_cell_rows)), max(n_live, 2)))
@@ -2371,7 +2342,7 @@ def semantic_dedup(
     assigned = _assign_quantized(
         emb.filter(self_dot > 0), cents, vec_col, quant
     )
-    live = _parallel_checkpoint(assigned, assume_parallel=True)
+    live = assigned.localCheckpoint(eager=False)
     # Sub-block the within-cluster pairing (the cosine_pairs_blocked
     # scheme NESTED inside each cell): with a pinned gate k the cell
     # size grows linearly with the corpus and each cell's |cell|^2
@@ -2452,7 +2423,7 @@ def project_out_direction(
     correction references it — Catalyst's projection collapse would
     otherwise inline the 64-term dot into each of the 64 correction
     terms (the r09 element_at trap)."""
-    emb = _parallel_checkpoint(emb)
+    emb = widen_narrow_source(emb).localCheckpoint(eager=False)
     if v_milli is None:
         v_milli = power_iteration_milli(
             emb, n_iter=n_iter, id_col=id_col, vec_col=vec_col,
@@ -2473,14 +2444,11 @@ def project_out_direction(
         ["CAST(0 AS BIGINT)"]
         + [f"{t} * {v_milli[d]}L" for d, t in enumerate(xm_terms)]
     )
-    base = _parallel_checkpoint(
-        emb.select(
-            F.col(id_col),
-            F.expr(f"array({', '.join(xm_terms)})").alias("__xm"),
-            F.expr(dot_sql).alias("__dot"),
-        ),
-        assume_parallel=True,
-    )
+    base = emb.select(
+        F.col(id_col),
+        F.expr(f"array({', '.join(xm_terms)})").alias("__xm"),
+        F.expr(dot_sql).alias("__dot"),
+    ).localCheckpoint(eager=False)
     vlits = ", ".join(f"{x}L" for x in v_milli)
     corr = (
         f"(CASE WHEN __dot * vd >= 0 THEN (__dot * vd) DIV {vn2}L "

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf, shuffle_width
+
 SALT_COL = "__salt"
 
 
@@ -33,9 +35,8 @@ def widen_narrow_source(
 
     A compact input — one parquet file with one row group at bench
     scale — scans as ONE partition, so everything up to the first
-    exchange runs as a single task on a many-core executor (the
-    similarity._parallel_checkpoint / winnow_fingerprints catch,
-    generalized). The dispatch is a plan-metadata probe, no job:
+    exchange runs as a single task on a many-core executor (the r07
+    ann_ivfpq_topk / winnow_fingerprints catch, generalized). The dispatch is a plan-metadata probe, no job:
 
       * source already >= shuffle width partitions (any real 100 TB
         scan): returned unchanged — zero cost at scale;
@@ -55,21 +56,15 @@ def widen_narrow_source(
     key), so the exchange is not extra at any scale, merely moved
     before the explosion. The probe is a full physical planning of
     the frame (measured ~0.25 s even on simple plans, 0.4-0.9 s on
-    complex ones — the similarity._parallel_checkpoint note), pure
+    complex ones such as the IVFADC residual plan), pure
     waste when the answer cannot change the plan."""
-    sess = df.sparkSession
-    try:
-        target = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        target = 32
+    target = shuffle_width(df.sparkSession)
     if probe and df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, *[F.col(c) for c in key_cols])
 
 
-def pinned_checkpoint(
-    df: DataFrame, eager: bool = False, storage_level=None
-) -> DataFrame:
+def pinned_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     """Lazy localCheckpoint that KEEPS the frame's physical
     partitioning/ordering visible to downstream planning.
 
@@ -93,26 +88,11 @@ def pinned_checkpoint(
     and keep plain localCheckpoint where AQE's runtime reshaping of
     the subtree matters more than the downstream re-exchange.
 
-    CONCURRENCY CONTRACT (same class as sessions.run_to_memory's
-    shuffle-partitions pin): spark.sql.adaptive.enabled is a
-    session-global conf and PySpark exposes no expression-scoped
-    withSQLConf, so the toggle is set-around-compile with a
-    finally-restore. Callers must not compile OTHER plans on the same
-    SparkSession between entry and return — a concurrent plan build
-    would race the toggle and could compile wholesale without AQE
-    (losing runtime skew splitting at scale). Every catalog query
-    plans single-threaded on the driver, so the gate/bench never hit
-    the window; concurrent plan builders must use separate
-    SparkSession.newSession() handles."""
-    sess = df.sparkSession
-    prev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        if storage_level is not None:
-            return df.localCheckpoint(eager=eager, storageLevel=storage_level)
+    The AQE toggle is a session-conf change around the compile, made
+    through session.scoped_conf (see there for what concurrent plan
+    builders may and may not rely on)."""
+    with scoped_conf(df.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         return df.localCheckpoint(eager=eager)
-    finally:
-        sess.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def with_salt(df: DataFrame, salt_from: list[str], n_salts: int) -> DataFrame:

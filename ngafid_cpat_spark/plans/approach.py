@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from ..functions import geo
 from ..operators import windows as OW
 from ..operators.skew import pinned_checkpoint
+from ..session import shuffle_width
 
 TELEMETRY_COLS = (
     "flight",
@@ -376,12 +377,7 @@ def analyze(
     # whole pipeline runs on ONE data placement instead of
     # re-exchanging per stage (also removes hot-path exchange jitter;
     # measured slightly faster and much steadier at sf0.1)
-    df = df.repartition(
-        int(
-            flight_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        ),
-        "flight",
-    )
+    df = df.repartition(shuffle_width(flight_df.sparkSession), "flight")
 
     # 2. nearest airport + AGL + distance (FlightAnalysis.py:143-147)
     df = with_nearest_airport(df, airports)

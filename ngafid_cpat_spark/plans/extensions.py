@@ -19,6 +19,8 @@ from ..operators import dedup as D
 from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import windows as OW
+from ..operators.skew import widen_narrow_source
+from ..session import shuffle_width
 from ..sources import load
 from .relational import SCALED_ORACLES, TOLERANCE_ORACLES, register
 
@@ -827,11 +829,10 @@ def lr_quality_train_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 iterations as unrolled CTEs and hash-matches weights, row
     count, and training accuracy."""
     from ..operators import corpus as C
-    from ..operators.skew import widen_narrow_source
 
     # widen by doc_id BEFORE the feature projection: the normalize/
     # split/array_distinct chain ran single-task on the one-file
-    # corpus (the round-robin widen inside _parallel_checkpoint came
+    # corpus (a round-robin widen just before the checkpoint came
     # AFTER it), and id clustering co-partitions the feature<->label
     # self-join
     docs = widen_narrow_source(
@@ -845,7 +846,7 @@ def lr_quality_train_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id",
     )
     # 5 passes share one materialization; parallel by construction
-    feats = S._parallel_checkpoint(feats, assume_parallel=True)
+    feats = feats.localCheckpoint(eager=False)
     model = C.train_linear_classifier(feats, n_iter=4)
     w = model["weights_micro"]
     return spark.createDataFrame(
@@ -889,8 +890,6 @@ def quality_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, no shuffle, no RNG state."""
     from ..operators import corpus as C
 
-    from ..operators.skew import widen_narrow_source
-
     # widen by doc_id BEFORE the feature projection (the
     # lr_quality_train_docs shape): parallel feature compute +
     # co-partitioned label join, one shared materialization
@@ -904,7 +903,7 @@ def quality_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "id",
     )
-    feats = S._parallel_checkpoint(feats, assume_parallel=True)
+    feats = feats.localCheckpoint(eager=False)
     model = C.train_linear_classifier(feats, n_iter=4)
     scored = feats.select(
         F.col("id").alias("doc_id"),
@@ -992,7 +991,8 @@ def dedup_keep_best_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "id",
     )
-    feats = S._parallel_checkpoint(feats)  # 4 GD passes + scoring share one
+    # 4 GD passes + scoring share one materialization
+    feats = widen_narrow_source(feats).localCheckpoint(eager=False)
     model = C.train_linear_classifier(feats, n_iter=4)
     scored = feats.select(
         F.col("id").alias("doc_id"),
@@ -1799,11 +1799,11 @@ def pq_topk_trained_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast semi-join of 50 ids."""
     # shared checkpointed frame: training and the encode/ADC scan
     # read one materialization instead of two parquet+cast scans
-    emb = S._parallel_checkpoint(
+    emb = widen_narrow_source(
         load(spark, sf_dir, "embeddings").withColumn(
             "embedding", F.col("embedding").cast("array<double>")
         )
-    )
+    ).localCheckpoint(eager=False)
     q = _query_vector(spark, sf_dir, 0)
     books = S.pq_codebooks_trained(
         emb, m=16, k=16, n_iter=2, checkpoint_input=False
@@ -1837,11 +1837,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same parquet+cast — pure fixed latency in this
     # training-in-query twin (the persisted-index production path is
     # ann_ivfpq_indexed)
-    emb = S._parallel_checkpoint(
+    emb = widen_narrow_source(
         load(spark, sf_dir, "embeddings").withColumn(
             "embedding", F.col("embedding").cast("array<double>")
         )
-    )
+    ).localCheckpoint(eager=False)
     q = _query_vector(spark, sf_dir, 0)
     coarse = S.kmeans_fit(emb, k=8, n_iter=2, checkpoint_input=False)
     out = S.ivfpq_topk(
@@ -5337,9 +5337,7 @@ def profile_columns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a one-file table scans as ONE partition, and the Expand (rows x
     # #distinct-columns) then runs single-task; spread the scan first
     # — at production file counts the layout already provides this
-    ev = ev.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    )
+    ev = ev.repartition(shuffle_width(spark))
     aggs = []
     for name, kind in _PROFILE_COLS:
         v = F.col(name).cast("double") if kind == "ts" else F.col(name)
@@ -6485,7 +6483,6 @@ def calibration_lr_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     binning/means. Scale: training is n_iter one-aggregate passes;
     the diagram is one 10-key map-side-combining groupBy."""
     from ..operators import corpus as C
-    from ..operators.similarity import _parallel_checkpoint
 
     docs = load(spark, sf_dir, "documents")
     feats = C.classifier_features(docs).join(
@@ -6495,7 +6492,7 @@ def calibration_lr_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "id",
     )
-    feats = _parallel_checkpoint(feats)
+    feats = widen_narrow_source(feats).localCheckpoint(eager=False)
     model = C.train_linear_classifier(feats, n_iter=4)
     scored = feats.select(
         "y", C.linear_score(model["weights_micro"]).alias("p")

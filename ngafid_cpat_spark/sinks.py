@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import scoped_conf
+
 BUCKET_COL = "__bucket"
 SPEC_FILE = "_bucket_spec.json"
 
@@ -168,14 +170,10 @@ def upsert(
         # to overwrite a path it is reading from); Delta MERGE would make
         # this a real transaction on a production cluster
         merged = merged.localCheckpoint(eager=True)
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with scoped_conf(
+            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        ):
             merged.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
         if table_was_absent and _read_spec(path) is None:
             _write_spec(path, keys, n_buckets)
     finally:
@@ -282,17 +280,17 @@ def compact(
     compacted = df.repartition(max(n_buckets, 1), F.col(BUCKET_COL)).localCheckpoint(
         eager=True
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     try:
-        (
-            compacted.write.partitionBy(BUCKET_COL)
-            .option("maxRecordsPerFile", max_records_per_file)
-            .mode("overwrite")
-            .parquet(path)
-        )
+        with scoped_conf(
+            spark, {"spark.sql.sources.partitionOverwriteMode": "static"}
+        ):
+            (
+                compacted.write.partitionBy(BUCKET_COL)
+                .option("maxRecordsPerFile", max_records_per_file)
+                .mode("overwrite")
+                .parquet(path)
+            )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         # inside finally: a crash after the static overwrite (which
         # deletes the spec along with the old files) but before the
         # restore must not strip the table's layout record

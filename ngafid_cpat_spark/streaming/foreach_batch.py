@@ -23,25 +23,6 @@ from pyspark.sql import functions as F
 from .. import sinks
 
 
-def windowed_counts_update(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per (window_start, event_type) counts/sums for update-mode
-    output. The watermark bounds aggregation state; in update mode it
-    only controls state eviction, not emission."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-    )
-
-
 def stream_upsert(
     agg: DataFrame,
     path: str,

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import SHUFFLE_PARTITIONS, scoped_conf
 from ..sources.tables import normalize_event_time
 
 
@@ -135,20 +136,15 @@ def run_to_memory(
     partition-count invariant (append-mode emission is row-local;
     the determinism sweep covers these queries).
 
-    CONCURRENCY CONTRACT: spark.sql.shuffle.partitions is a
-    session-global conf and Spark offers no per-stream override, so
-    the pin is a set-around-start with a finally-restore. Callers
-    must not plan OTHER queries on the same SparkSession between
-    entering this function and its return (they would latch the
-    temporary value); run concurrent work on a separate
-    SparkSession.newSession() if needed. The catalog's streaming
-    queries all start their streams serially, so the gate and bench
-    never hit the window."""
+    The pin is a session-conf change around start (session.scoped_conf:
+    Spark offers no per-stream override); see scoped_conf for what
+    concurrent plan builders may and may not rely on. The catalog's
+    streaming queries all start their streams serially."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    pin = {}
+    if shuffle_partitions is not None:
+        pin[SHUFFLE_PARTITIONS] = str(shuffle_partitions)
+    with scoped_conf(spark, pin):
         q = (
             df.writeStream.format("memory")
             .queryName(query_name)
@@ -157,8 +153,6 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return q
 
 

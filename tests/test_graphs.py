@@ -275,6 +275,36 @@ def test_kcore_k3_drops_two_core_cycle(spark):
     assert out == {5: 3, 6: 3, 7: 3, 8: 3}
 
 
+def _persistent_rdd_ids(spark):
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in m.keySet().toArray()}
+
+
+def test_peel_loops_keep_only_the_final_rounds_rdds(spark):
+    """kcore and ktruss free each peel round's persistent RDDs once the
+    next round's eager checkpoint holds the data, so after the call
+    only the final round's remain: one per kcore round (its eager
+    checkpoint) and at most two per ktruss round (plus the lazy
+    oriented-edge checkpoint inside _triangle_rows), never one set
+    per round."""
+    g = _edges(spark, [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+                       (4, 5), (4, 6), (4, 7), (5, 6), (5, 7), (6, 7),
+                       (7, 8), (8, 9)])
+    for run, per_round in (
+        (lambda: G.kcore(g, k=2, n_rounds=4), 1),
+        (lambda: G.ktruss(g, k=4, n_rounds=3), 2),
+    ):
+        before = _persistent_rdd_ids(spark)
+        out = run()
+        added = _persistent_rdd_ids(spark) - before
+        assert 1 <= len(added) <= per_round, added
+        out.collect()  # the surviving final round still backs the result
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        for jk in m.keySet().toArray():
+            if int(jk) in added:
+                m.get(jk).unpersist(False)
+
+
 # ---------------------------------------------------------------------------
 # k-truss (operators/graphs.ktruss)
 # ---------------------------------------------------------------------------

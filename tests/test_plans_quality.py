@@ -3,7 +3,9 @@ scale story depends on must survive refactors — filters reach the
 parquet scan, dimension joins broadcast, windowed queries keep to a
 single shuffle per window lineage, hot paths stay Python-free."""
 
+import ast
 import io
+import pathlib
 import re
 from contextlib import redirect_stdout
 
@@ -93,3 +95,47 @@ def test_priority_window_complete():
     assert missing == []
     assert list(QUERIES)[: len(PRIORITY)] == PRIORITY
     assert len(PRIORITY) == 50
+
+
+def test_session_conf_decisions_live_in_session_py():
+    """Shuffle width and scoped conf changes have one home,
+    session.py (shuffle_width / scoped_conf). Elsewhere only the
+    session-level reader setups, which pin confs for the rest of the
+    session on purpose, may call conf.set; nothing reads the shuffle
+    width by conf name, and the removed _parallel_checkpoint wrapper
+    stays gone."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "ngafid_cpat_spark"
+    session_level = {
+        ("sources/tables.py", "load"),
+        ("streaming/sessions.py", "read_events_stream"),
+        ("streaming/sessions.py", "use_rocksdb_state"),
+    }
+    width_reads, conf_sets, leftovers = [], [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        if "_parallel_checkpoint" in src:
+            leftovers.append(rel)
+        if rel == "session.py":
+            continue
+        if '"spark.sql.shuffle.partitions"' in src:
+            width_reads.append(rel)
+        tree = ast.parse(src)
+        allowed = [
+            range(fn.lineno, fn.end_lineno + 1)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and (rel, fn.name) in session_level
+        ]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+                and not any(node.lineno in r for r in allowed)
+            ):
+                conf_sets.append((rel, node.lineno))
+    assert width_reads == []
+    assert conf_sets == []
+    assert leftovers == []

@@ -2,12 +2,16 @@
 join without an exchange (co-located join)."""
 
 import io
+import re
+import threading
+import time
 from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
 
 from ngafid_cpat_spark.operators import skew
+from ngafid_cpat_spark.session import scoped_conf
 
 
 @pytest.fixture(scope="module")
@@ -85,6 +89,101 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_cust")
+
+
+def test_pinned_checkpoint_keeps_hash_partitioning(spark):
+    """pinned_checkpoint compiles with AQE off, so the LogicalRDD it
+    returns carries the frame's real HashPartitioning and a groupBy
+    on the key plans no Exchange. (A plain localCheckpoint of a fresh
+    frame under AQE reports UnknownPartitioning(0) and re-exchanges.)
+    The frame must be fresh: a Dataset caches its compiled plan."""
+    df = (
+        spark.range(100).selectExpr("id % 7 AS k", "id AS v")
+        .repartition(3, "k").sortWithinPartitions("k")
+    )
+    pinned = skew.pinned_checkpoint(df)
+    part = pinned._jdf.queryExecution().analyzed().outputPartitioning()
+    assert re.fullmatch(r"hashpartitioning\(k#\d+L?, 3\)", part.toString())
+    plan = (
+        pinned.groupBy("k").count()._jdf.queryExecution().executedPlan()
+    ).toString()
+    assert "Exchange" not in plan, plan
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_pinned_checkpoint_restores_aqe_when_body_raises(spark):
+    failing = spark.range(1).select(F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(Exception, match="boom"):
+        skew.pinned_checkpoint(failing, eager=True)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def _in_thread(fn, timeout=60):
+    """Run ``fn`` on a daemon thread; a scope that deadlocks fails
+    the test instead of hanging the suite."""
+    errors = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # re-raised on the test thread
+            errors.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout)
+    assert not t.is_alive(), "scoped_conf deadlocked"
+    if errors:
+        raise errors[0]
+
+
+def test_scoped_conf_nests_on_one_thread(spark):
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+
+    def nested():
+        with scoped_conf(spark, {key: "5"}):
+            assert spark.conf.get(key) == "5"
+            with scoped_conf(spark, {key: "7"}):
+                assert spark.conf.get(key) == "7"
+            assert spark.conf.get(key) == "5"
+
+    _in_thread(nested)
+    assert spark.conf.get(key) == prev
+
+
+def test_scoped_conf_second_thread_waits_for_first(spark):
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    entered, release = threading.Event(), threading.Event()
+    log = []
+
+    def first():
+        with scoped_conf(spark, {key: "3"}):
+            log.append("first-in")
+            entered.set()
+            release.wait(30)
+            log.append(("first-out", spark.conf.get(key)))
+
+    def second():
+        entered.wait(30)
+        with scoped_conf(spark, {key: "5"}):
+            log.append(("second-in", spark.conf.get(key)))
+
+    t1 = threading.Thread(target=first, daemon=True)
+    t2 = threading.Thread(target=second, daemon=True)
+    t1.start()
+    t2.start()
+    try:
+        assert entered.wait(30)
+        time.sleep(0.5)  # room for the second scope to (wrongly) enter
+        assert log == ["first-in"]
+    finally:
+        release.set()
+        t1.join(30)
+        t2.join(30)
+    assert log == ["first-in", ("first-out", "3"), ("second-in", "5")]
+    assert spark.conf.get(key) == prev
 
 
 def test_geo_properties_randomized(spark):

@@ -370,9 +370,7 @@ def main() -> None:
 
     def quality_sample(docs):
         from ngafid_cpat_spark.operators import corpus as C
-        from ngafid_cpat_spark.operators.similarity import (
-            _parallel_checkpoint,
-        )
+        from ngafid_cpat_spark.operators.skew import widen_narrow_source
 
         # the registered quality_weighted_sample_docs chain:
         # featurize -> 4-round GD training (one map-side-combining
@@ -387,7 +385,7 @@ def main() -> None:
             ),
             "id",
         )
-        feats = _parallel_checkpoint(feats)
+        feats = widen_narrow_source(feats).localCheckpoint(eager=False)
         model = C.train_linear_classifier(feats, n_iter=4)
         scored = feats.select(
             F.col("id").alias("doc_id"),
